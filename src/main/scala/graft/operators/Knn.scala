@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.geo.{QuadkeyTiling, TilingStrategy}
 
@@ -16,11 +17,20 @@ import graft.geo.{QuadkeyTiling, TilingStrategy}
   * closed form as the SQL oracle, so ranks match bit-for-bit.
   *
   * EXACTNESS: a point outside ring r of the query's cell is at planar
-  * distance >= r * min(cellW, cellH). A query is settled once it has k
-  * candidates and its k-th distance² < (r*minDim)²; otherwise the ring
-  * doubles (driver loop, ≙ the retriever's layer-descent loop). Unsettled
-  * stragglers after maxIter fall back to brute force (never happens at sane
-  * density; the fallback keeps the operator total).
+  * distance >= r * u, u = [[TilingStrategy.minUnitDeg]]. A query is settled
+  * once it has k candidates and its k-th distance² dk < (r*u)²: every point
+  * the ring missed is strictly farther than all k it holds. An unsettled
+  * query picks its own next ring (driver loop, ≙ the retriever's
+  * layer-descent loop):
+  *  - with k candidates, ⌊√dk / u⌋ + 1. Its bound exceeds √dk and the
+  *    larger ring holds the same k points or nearer ones, so it settles in
+  *    the next round;
+  *  - with n < k, r · 2 · ⌈√(k / max(n,1))⌉: the candidate count grows with
+  *    r², so this aims past k in one step.
+  * Rings are capped at 4·2^(maxIter−1) (a ring costs O(r²) per query to
+  * enumerate). A query still unsettled at the cap — far from every image,
+  * or k > |images| — falls back to brute force, which keeps the operator
+  * total.
   *
   * Scale design: the query side is tiny and BROADCAST after ring explosion;
   * the image side is scanned (pruned to 5 columns), never shuffled — only
@@ -41,66 +51,94 @@ object Knn {
     * (qid, image_id, dist_sq, rnk, bytes). Deterministic tiebreak on
     * (dist_sq, image_id).
     *
-    * The settle loop is fully join-based: the settled-query set stays a
-    * DataFrame end to end (left_semi to harvest, left_anti to shrink the
-    * remaining side) — no `collect()`ed id set, no literal `isin`, so the
-    * plan size is O(1) in |queries| and a 10^6-row query table is fine.
-    * Each round's ranked candidates are persisted only while harvested;
-    * settled rows are `localCheckpoint`ed (materialized + lineage cut) so
-    * the per-round cache can be released immediately. On a real cluster
-    * localCheckpoint blocks live on executors — for resumable multi-hour
-    * jobs swap for a reliable `checkpoint` dir; the shape is identical. */
+    * The settle loop is fully join-based: no `collect()`ed id set, no
+    * literal `isin`, so the plan size is O(1) in |queries| and a 10^6-row
+    * query table is fine. Each round is ONE eager action: a
+    * `localCheckpoint` of the round's ranked candidates, every row tagged
+    * with its query's state (settled / open with its next ring / capped).
+    * The settled rows and the next round's queries are both filters of
+    * that checkpoint, and the driver's only input — how many queries are
+    * open or capped — is observed while the checkpoint is written
+    * ([[org.apache.spark.sql.Observation]]), not counted by a second job.
+    * On a real cluster localCheckpoint blocks live on executors — for
+    * resumable multi-hour jobs swap for a reliable `checkpoint` dir; the
+    * shape is identical. */
   def knnExact(images: DataFrame, queries: DataFrame, k: Int,
                res: Int = DefaultRes, maxIter: Int = 6,
                strategy: TilingStrategy = QuadkeyTiling): DataFrame = {
-    // No cache: with r0=4 the loop almost always finishes in one round, so
-    // the leaf projection is scanned once either way; caching it cost more
-    // (600k-row cache write) than the rare straggler recompute it saved.
+    // No cache: the sf0.01 and sf0.1 query batches settle in one round,
+    // where caching the leaf projection made the call ~30% slower
+    // (local[4]); a second round rescans it instead.
     val lv = leaves(images, res, strategy)
-    locally {
-      val minDim = strategy.minUnitDeg(res)
-      val q0 = queries.select(col("qid"), col("qlat"), col("qlon"))
-        .withColumn("qcell", strategy.encodeCol(col("qlat"), col("qlon"), res))
-
-      var remaining = q0
-      var settled: DataFrame = null
-      // r=4 settles typical densities in ONE round: candidates grow with
-      // ring area (cheap — still a few hundred rows/query) while each
-      // extra ROUND costs a full job cycle (rank + settle-check + filter),
-      // which dominates at any scale. Stragglers still double the ring.
-      var r = 4
-      var iter = 0
-      var nRemaining = remaining.count()
-      while (iter < maxIter && nRemaining > 0) {
-        val ranked = rankCandidates(lv, remaining, r, k, strategy)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val bound = r * minDim
-        val okQids = ranked.groupBy(col("qid"))
-          .agg(count(lit(1)).as("n"), max(col("dist_sq")).as("dk"))
-          .filter(col("n") === k && col("dk") < bound * bound)
-          .select(col("qid"))
-        val nDone = okQids.count()
-        if (nDone > 0) {
-          val done = ranked.join(okQids, Seq("qid"), "left_semi")
-            .localCheckpoint(true)
-          settled = if (settled == null) done else settled.unionByName(done)
-          remaining =
-            if (nDone == nRemaining) remaining.limit(0)
-            else remaining.join(okQids, Seq("qid"), "left_anti")
-              .localCheckpoint(true)
-        }
-        ranked.unpersist()
-        nRemaining -= nDone
-        r *= 2
-        iter += 1
-      }
-      if (nRemaining == 0) settled
-      else {
-        // brute-force stragglers (guaranteed exact, trivially small q side)
-        val brute = bruteRank(lv, remaining, k)
-        if (settled == null) brute else settled.unionByName(brute)
-      }
+    val minDim = strategy.minUnitDeg(res)
+    val rCap = 4 << (maxIter - 1)
+    // r=4 settles typical densities in ONE round: candidates grow with
+    // ring area (cheap — still a few hundred rows/query) while each extra
+    // ROUND costs a full job cycle, which dominates at any scale.
+    var open = queries.select(col("qid"), col("qlat"), col("qlon"))
+      .withColumn("qcell", strategy.encodeCol(col("qlat"), col("qlon"), res))
+      .withColumn("r", lit(4))
+    val settled = ArrayBuffer.empty[DataFrame]
+    val stragglers = ArrayBuffer.empty[DataFrame]
+    var nOpen = 1L
+    var iter = 0
+    while (iter < maxIter && nOpen > 0) {
+      val obs = Observation()
+      val ck = settleRound(lv, open, k, minDim, rCap, strategy)
+        .observe(obs,
+          count(when(col("rnk") === 1 && col("state") === Open, 1)).as("open"),
+          count(when(col("rnk") === 1 && col("state") === Capped, 1)).as("capped"))
+        .localCheckpoint(true)
+      val m = obs.get
+      settled += ck.filter(col("state") === Settled)
+        .select(col("qid"), col("image_id"), col("dist_sq"), col("rnk"), col("bytes"))
+      // one row per unsettled query: rnk 1 is its nearest candidate, or
+      // its placeholder row when the ring held none
+      def queriesIn(state: Int) = ck.filter(col("rnk") === 1 && col("state") === state)
+        .select(col("qid"), col("qlat"), col("qlon"), col("qcell"), col("r"))
+      if (m("capped").asInstanceOf[Long] > 0) stragglers += queriesIn(Capped)
+      nOpen = m("open").asInstanceOf[Long]
+      open = queriesIn(Open)
+      iter += 1
     }
+    if (nOpen > 0) stragglers += open
+    // brute-force stragglers (guaranteed exact, trivially small q side)
+    val brute = stragglers.reduceOption(_.unionByName(_)).map(bruteRank(lv, _, k))
+    (settled ++ brute).reduce(_.unionByName(_))
+  }
+
+  private val Settled = 0
+  private val Open = 1
+  private val Capped = 2
+
+  /** One settle round over the open queries (qid, qlat, qlon, qcell, r):
+    * each query's top-k among its ring-r candidates, every row tagged with
+    * the query's `state` and `r` set to the query's next ring. */
+  private def settleRound(lv: DataFrame, qs: DataFrame, k: Int, minDim: Double,
+                          rCap: Int, strategy: TilingStrategy): DataFrame = {
+    val cand = qs.withColumn("cell", explode(strategy.ringCol(col("qcell"), col("r"))))
+    val byDist = Window.partitionBy(col("qid"))
+      .orderBy(col("dist_sq").asc_nulls_last, col("image_id"))
+    val perQuery = Window.partitionBy(col("qid"))
+    val (n, dk, r) = (col("n"), col("dk"), col("r"))
+    val bound = r * minDim
+    val next = when(n === k, floor(sqrt(dk) / minDim) + 1)
+      .otherwise(r * 2 * ceil(sqrt(lit(k.toDouble) / greatest(n, lit(1L)))))
+    lv.join(broadcast(cand), Seq("cell"))
+      // one image-less row per query, ranked after its candidates, so a
+      // query whose ring holds no image still has a row to carry it on
+      .unionByName(qs, allowMissingColumns = true)
+      .withColumn("dist_sq", distSq)
+      .withColumn("rnk", row_number().over(byDist))
+      .filter(col("rnk") <= k)
+      .select(col("*"), count(col("image_id")).over(perQuery).as("n"),
+        max(col("dist_sq")).over(perQuery).as("dk"))
+      .select(col("qid"), col("image_id"), col("dist_sq"), col("rnk"),
+        (col("w") * col("h") * 3).cast("long").as("bytes"),
+        col("qlat"), col("qlon"), col("qcell"),
+        when(n === k && dk < bound * bound, Settled)
+          .when(r < rCap, Open).otherwise(Capped).as("state"),
+        least(greatest(next, r + 1), lit(rCap)).cast("int").as("r"))
   }
 
   private def distSq = (col("lat") - col("qlat")) * (col("lat") - col("qlat")) +
@@ -113,13 +151,6 @@ object Knn {
       .filter(col("rnk") <= k)
       .select(col("qid"), col("image_id"), col("dist_sq"), col("rnk"),
         (col("w") * col("h") * 3).cast("long").as("bytes"))
-  }
-
-  private def rankCandidates(lv: DataFrame, qs: DataFrame, r: Int, k: Int,
-                             strategy: TilingStrategy): DataFrame = {
-    val cand = qs.withColumn("cell",
-      explode(strategy.ringCol(col("qcell"), lit(r))))
-    topK(lv.join(broadcast(cand), Seq("cell")), k)
   }
 
   private def bruteRank(lv: DataFrame, qs: DataFrame, k: Int): DataFrame =
@@ -180,7 +211,10 @@ object Knn {
     *  - the per-query top-k is [[graft.agg.TopK]], an ObjectHashAggregate
     *    that reduces each task's candidates to ≤ k rows per query BEFORE
     *    the shuffle — the exchange carries |queries| × partials × k rows
-    *    however many pairs the join emits (158 s → 8.6 s at sf0.1).
+    *    however many pairs the join emits. Still the suite's costliest
+    *    query: q_knn_join, which fills the shared edge-list memo, took
+    *    131.9 s of the round-5 driver bench (BENCH_r05.json, sf0.1,
+    *    local[32]).
     * Output is row-for-row the window form (same (d2, nid) tie-break). */
   def knnSelfJoin(images: DataFrame, k: Int,
                   res: Int = DefaultRes,

@@ -234,11 +234,11 @@ object Retrieval {
   /** Shared ranked+running-total derivation of the two collapse modes. */
   private def collapseRanked(pyramid: DataFrame, queries: DataFrame,
                              k: Int): DataFrame = {
-    // single scan of the tile table, but a derived pyramid's union chain
-    // re-evaluates shared rollup prefixes per branch -> materialize once
-    val tiles = tileCols(pyramid).persist(StorageLevel.MEMORY_AND_DISK)
+    // No persist: the tile table is scanned once, and callers pass a
+    // materialized pyramid (a Snapshot read or a checkpointed build); a
+    // cache here would stay resident, as nothing could release it.
     val q = queries.select(col("qid"), col("qlat"), col("qlon"))
-    val ranked = rankPerQuery(tiles.crossJoin(broadcast(q)), k)
+    val ranked = rankPerQuery(tileCols(pyramid).crossJoin(broadcast(q)), k)
     val w = Window.partitionBy(col("qid")).orderBy(col("rnk"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ranked.withColumn("cum", sum(col("cnt")).over(w))

@@ -549,9 +549,13 @@ object Snapshot {
     * One tiny file per ref under `_refs/`; [[setRef]] writes a temp file
     * and ATOMIC_MOVEs it over the name, so readers never observe a torn
     * ref — the same last-writer-wins commit the versioned manifests use.
-    * Refs are metadata-only: retagging touches zero data files. */
+    * Refs are metadata-only: retagging touches zero data files. The target
+    * must be COMMITTED (its MANIFEST exists): a mistyped id is rejected
+    * before the ref moves, so the old pin keeps resolving. */
   def setRef(root: String, name: String, snapshotId: String): Unit = {
     require(name.matches("[A-Za-z0-9._-]+"), s"bad ref name: $name")
+    require(Files.exists(Paths.get(s"$root/MANIFEST-$snapshotId.json")),
+      s"ref $name: snapshot $snapshotId is not committed")
     val dir = Paths.get(root, "_refs")
     Files.createDirectories(dir)
     val tmp = Files.createTempFile(dir, s".$name", ".tmp")

@@ -358,6 +358,26 @@ class SnapshotSpec extends SparkFunSuite {
     Snapshot.deleteRecursively(java.nio.file.Paths.get(root))
   }
 
+  test("named refs: a retag to an uncommitted id throws, the old ref stands") {
+    val root = Files.createTempDirectory("graft-ref-commit-spec").toString
+    val tiles = TilePyramid.withCell(images, 6)
+      .groupBy("cell").agg(count(lit(1)).as("cnt"))
+      .withColumn("res", lit(6))
+    Snapshot.writeVersioned(tiles, root, "v1", 1L)
+    Snapshot.setRef(root, "stable", "v1")
+    val e = intercept[IllegalArgumentException] {
+      Snapshot.setRef(root, "stable", "vl") // mistyped v1
+    }
+    assert(e.getMessage.contains("not committed"))
+    intercept[IllegalArgumentException] {
+      Snapshot.setRef(root, "fresh", "v2") // no such version at all
+    }
+    assert(Snapshot.resolveRef(root, "stable") == "v1")
+    assert(Snapshot.refs(root) == Seq("stable" -> "v1"))
+    assert(Snapshot.readByRef(spark, root, "stable").count() == tiles.count())
+    Snapshot.deleteRecursively(java.nio.file.Paths.get(root))
+  }
+
   test("orphan files: uncommitted version dirs and scratch are flagged, " +
       "committed data survives removal") {
     val root = Files.createTempDirectory("graft-orphan-spec").toString

@@ -17,6 +17,9 @@ object SparkSpec {
       // planner's DisableUnnecessaryBucketedScan would otherwise silently
       // re-scan all buckets for a single-term posting lookup.
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+      // the optimizer setting Verify, Bench, Smoke and perfbench run under,
+      // so the suites plan cached frames the way the shipped entry points do
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
